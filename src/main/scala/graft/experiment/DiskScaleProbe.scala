@@ -45,15 +45,8 @@ object DiskScaleProbe {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val root = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
       "/root/repo/target/scale")
-    val cores = sys.env.get("SPARK_GRAFT_CORES").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = graft.GraftSession.cpus
+    val spark = graft.GraftSession.builder(cores).getOrCreate()
 
     val offset = 1L << 40
     def shifted(df: DataFrame, keys: Seq[String], k: Int): DataFrame =

@@ -32,9 +32,6 @@ object GoldenExperiment {
     "CE16OV", "UNRATE", "UEMPMEAN", "UEMPLT5", "UEMP5TO14", "UEMP15OV",
     "UEMP15T26", "UEMP27OV", "PAYEMS", "USPRIV", "CES1021000001", "FEDFUNDS")
 
-  /** Diagnostic access for CvProbe. */
-  def quarterSumsForProbe(diffs: Array[Double]): DenseVector[Double] = quarterSums(diffs)
-
   /** Quarter sum of a monthly diff series with R NA semantics (A1): the
     * first quarter is dropped, a quarter with any NaN diff is NaN.
     */
@@ -61,18 +58,6 @@ object GoldenExperiment {
     * the start.pred row (2000 Q1).
     */
   final case class Panel(y: DenseMatrix[Double], startPredIdx: Int)
-
-  def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   /** Repaired columns + GDP log-diffs — the prep state that does NOT
     * depend on the model's column set, so multi-model workloads run it
@@ -123,29 +108,22 @@ object GoldenExperiment {
   /** Column-set-independent half of buildPanel: ingest, quarterly diffs,
     * Testing.R-variant repair, GDP log-diffs — run ONCE per session for
     * multi-model workloads.
-    *
-    * @param exclude series dropped from the working set BEFORE repair —
-    *                Main.R:93's own "NONBORRES should probably be exluded"
-    *                note; exclusion can change OTHER columns' transforms
-    *                because the repair loop's iteration count and stuck
-    *                condition depend on the whole non-stationary set.
     */
-  def prepare(spark: SparkSession, exclude: Set[String] = Set.empty): Prepared = {
+  def prepare(spark: SparkSession): Prepared = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_PANEL_DIR", "data/panel")
     // Collect the monthly panel column-wise (696×146 — P9 dematerialize).
     val monthlyDf = PanelIngest.loadMonthly(spark, s"$dir/monthly_panel.parquet")
       .orderBy("date")
     val mRows = monthlyDf.collect()
     val monthly: Map[String, Array[Double]] = PanelIngest.seriesNames.zipWithIndex
-      .collect { case (n, j) if !exclude.contains(n) =>
+      .map { case (n, j) =>
         n -> mRows.map(r => if (r.isNullAt(j + 1)) Double.NaN else r.getDouble(j + 1))
       }.toMap
-    val names = PanelIngest.seriesNames.filterNot(exclude.contains)
 
     // W1+A1: quarterly sums of monthly first differences.
     def diffs(xs: Array[Double]): Array[Double] =
       Array.tabulate(xs.length)(i => if (i == 0) Double.NaN else xs(i) - xs(i - 1))
-    val quarterly = ListMap.from(names.map { n =>
+    val quarterly = ListMap.from(PanelIngest.seriesNames.map { n =>
       n -> quarterSums(diffs(monthly(n)))
     })
 
@@ -198,7 +176,7 @@ object GoldenExperiment {
     val panelCols = if (args.length > 3 && args(3) == "econ2") EconVars2 else EzlassoAll
     val method = if (args.length > 4) args(4) else "enet"
     val cvFoldPaths = if (args.length > 5 && args(5) != "master") Some(args(5)) else None
-    val spark = buildSession()
+    val spark = graft.GraftSession()
     val panel = buildPanel(spark, panelCols)
     val y = panel.y
     val startPredIdx = panel.startPredIdx

@@ -29,15 +29,8 @@ object ScaleProbe {
     // contention into the fitted exponent α, making readings
     // incomparable across machines. The value used is recorded in every
     // emitted JSON line so α can be interpreted next to it.
-    val cores = sys.env.get("SPARK_GRAFT_CORES").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cores = graft.GraftSession.cpus
+    val spark = graft.GraftSession.builder(cores).getOrCreate()
 
     // k key-shifted copies: volume ×k AND key cardinality ×k — the
     // honest scale-up (pure duplication would only deepen groups).

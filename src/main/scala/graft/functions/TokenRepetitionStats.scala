@@ -15,8 +15,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why not higher-order functions: `aggregate()`/`array_sort` have no
   * doGenCode — every fold step walks an interpreted expression tree per
   * element, and the two-sort-two-fold formulation measured 1.6 s at
-  * sf0.1 against 0.5 s for the shuffle-aggregate draft it replaced
-  * (X13Probe). This expression keeps x13's map-only, zero-shuffle plan
+  * sf0.1 against 0.5 s for the shuffle-aggregate draft it replaced.
+  * This expression keeps x13's map-only, zero-shuffle plan
   * shape AND compiles to a single static call per row: sort the token
   * refs once, scan runs; sort the n-1 bigram START INDEES with a
   * two-position comparator (no bigram strings are materialized), scan

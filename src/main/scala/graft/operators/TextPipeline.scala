@@ -2034,8 +2034,7 @@ object TextPipeline {
     * state that fits in a row should never cross the wire). The per-row
     * kernel is the codegen'd [[graft.functions.TokenRepetitionStats]]
     * expression — a higher-order-function formulation (array_sort +
-    * aggregate() folds) measured 3× slower because HOFs run interpreted
-    * (X13Probe).
+    * aggregate() folds) measured 3× slower because HOFs run interpreted.
     * Thresholds sit ≥500 quanta from every observed value at sf0.01 AND
     * sf0.1, with both classes populated.
     */

@@ -2,29 +2,13 @@ package graft
 
 import graft.operators.Estimation
 import graft.sources.Tables
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Estimation-layer checks that need a SparkSession (the numeric kernels
   * themselves are covered matrix-level in TuneSpec/StatsSpec/LinalgSpec).
   */
-class EstimationSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class EstimationSpec extends AnyFunSuite with SharedSpark {
 
   test("the distributed ACF selection is row-identical to the m11 driver-matrix query") {
     // The scale path for the one driver-matrix query whose input could

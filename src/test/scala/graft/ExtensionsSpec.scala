@@ -1,8 +1,6 @@
 package graft
 
 import graft.functions.TextFunctions
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SQL surface of the native kernels: a session configured with
@@ -10,21 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * enablement path) must expose each registered function to `spark.sql`,
   * producing the same results as the internal Column/local forms.
   */
-class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExtensionsSpec extends AnyFunSuite with SharedSpark {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def extraConf = Map(
+    "spark.sql.extensions" -> "graft.plans.GraftExtensions")
 
   test("sorted_intersect_count is callable from SQL") {
     val n = spark.sql(

@@ -1,8 +1,6 @@
 package graft
 
 import graft.experiment.{GoldenExperiment, ModelTrain}
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the end-to-end golden-experiment MSFE anchors inside `sbt test`
@@ -23,25 +21,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * econ.vars.2 anchors (~10 s total, sharing one prepare pass) always run
   * and exercise the identical prep → repair → assemble → modeltrain chain.
   */
-class GoldenMsfeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GoldenMsfeSpec extends AnyFunSuite with SharedSpark {
 
   private val panelFile = new java.io.File(
     sys.env.getOrElse("SPARK_GRAFT_PANEL_DIR", "data/panel"),
     "monthly_panel.parquet")
   private val runHeavy = sys.env.contains("SPARK_GRAFT_FULL_GOLDEN")
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   // One prepare pass (ingest + quarterly diffs + stationarity repair)
   // shared by every anchor — the column-set-independent half of the run.

@@ -3,8 +3,6 @@ package graft
 import breeze.linalg.DenseMatrix
 import graft.experiment.ModelTrain
 import graft.tune.{RollingOriginTuner, Selection}
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Distributed-vs-local parity: the Spark-distributed fan-outs (per-origin
@@ -12,20 +10,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * results to the sequential path — broadcast reconstruction and
   * reduce ordering must not change the numbers.
   */
-class SparkParitySpec extends AnyFunSuite with BeforeAndAfterAll {
+class SparkParitySpec extends AnyFunSuite with SharedSpark {
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  test("the shared test session is GraftSession's contract at local[4]") {
+    val conf = spark.conf
+    assert(spark.sparkContext.master == "local[4]")
+    assert(conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    assert(spark.sparkContext.uiWebUrl.isEmpty)
   }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def panel(t: Int, seed: Long): DenseMatrix[Double] = {
     val g = new TestData.Lcg(seed)
@@ -64,13 +58,6 @@ class SparkParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val dist = RollingOriginTuner.tune(y, p = 1, initWindow = 30, horizon = 4,
       grid, IndexedSeq("a", "b"), spark = Some(spark))
     assert(local == dist)
-    // The historical driver-side fold must stay bit-identical too: both
-    // distributed paths sum in origin order, they just fold on different
-    // hosts.
-    val distDriverFold = RollingOriginTuner.tune(y, p = 1, initWindow = 30,
-      horizon = 4, grid, IndexedSeq("a", "b"), spark = Some(spark),
-      driverFold = true)
-    assert(local == distDriverFold)
   }
 
   test("M3 EnetVar: Spark per-equation fits == sequential, exactly") {

@@ -7,7 +7,7 @@ idle machine does NOT guarantee a clean sustained run. Run this
 first; steal above ~5% means quiet-bench medians will be inflated
 fleet-wide and per-query regressions cannot be read.
 """
-import subprocess, sys
+import os, subprocess, sys
 
 def cpu():
     return list(map(int, open('/proc/stat').readline().split()[1:]))
@@ -16,7 +16,7 @@ secs = int(sys.argv[1]) if len(sys.argv) > 1 else 15
 a = cpu()
 procs = [subprocess.Popen(['python3', '-c',
     f'import time\nt=time.time()\nwhile time.time()-t < {secs}: pass'])
-    for _ in range(32)]
+    for _ in range(os.cpu_count())]
 for p in procs: p.wait()
 b = cpu()
 d = [y - x for x, y in zip(a, b)]
